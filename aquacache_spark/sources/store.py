@@ -9,23 +9,34 @@ write amplification unit is a *partition*, so the design constraint
 (SURVEY §7.3: cluster by merge keys up front) is enforced here:
 
 - the store is hash-bucketed by series into ``bucket=N`` directories;
-- a merge rewrites only buckets containing touched series — the
+- a merge rewrites only buckets whose rows change — the
   partition-pruned subset, never the full table;
 - conflict modes mirror the reference: ``do_nothing`` keeps existing
-  rows on key collision, ``update`` replaces them.
+  rows on key collision, ``update`` replaces them;
+- a key may appear at most once in one merge batch. A repeated key
+  raises ``ValueError`` and commits nothing: ``ON CONFLICT DO UPDATE``
+  also refuses to touch a row twice, and Spark rows carry no
+  insertion order that could pick a winner;
+- a merge that changes no row commits nothing (the version stays).
 
 Commit protocol (the Delta-log idea reduced to one file per commit):
 bucket data lives in immutable versioned directories ``v<k>/bucket=N``;
 a JSON manifest maps each bucket to the version directory holding its
-data at that commit. A merge writes the touched buckets under a NEW
-version dir, writes ``_MANIFEST.v<k>.json``, then publishes with one
-atomic ``os.replace`` of the current-pointer ``_MANIFEST.json`` —
-readers resolve through a manifest, so a crash at any point leaves
-either the old or the new store, never a mixed one. Because commit
-manifests are retained, ``read(version=k)`` is Delta-style TIME
-TRAVEL (the audit/as-of emulation's storage analog); ``vacuum``
-drops old manifests and sweeps bucket dirs no retained commit
-references; ``optimize`` is the Delta-OPTIMIZE analog — a
+data at that commit. Every commit kind — ``merge``, ``overwrite``,
+``optimize``, ``stamp_props`` — stages its buckets under a NEW version
+dir and then goes through one publish path (``_publish``): it builds
+the next manifest from the old one, carries ``props`` forward, writes
+``_MANIFEST.v<k>.json`` and publishes with one atomic ``os.replace`` of
+the current-pointer ``_MANIFEST.json``. Readers resolve through a
+manifest, so a crash at any point leaves either the old or the new
+store, never a mixed one. Every read — ``read``, ``read_buckets``,
+``changes`` and the merge/optimize inputs — goes through one scan path
+(``_scan``): one parquet read per referenced version dir, unioned.
+
+Because commit manifests are retained, ``read(version=k)`` is
+Delta-style TIME TRAVEL (the audit/as-of emulation's storage analog);
+``vacuum`` drops old manifests and sweeps bucket dirs no retained
+commit references; ``optimize`` is the Delta-OPTIMIZE analog — a
 ``dataChange=false`` compaction commit that collapses many-small-
 commit fragmentation into one version dir with one file per bucket.
 
@@ -85,6 +96,39 @@ class ParquetMergeStore:
         if "props" in m:
             out["props"] = dict(m["props"])
         return out
+
+    def _current(self) -> dict:
+        """The current manifest; a store not created yet is version 0
+        with no buckets, so a first commit takes the same path as any
+        later one."""
+        try:
+            return self._load_manifest()
+        except FileNotFoundError:
+            return {"version": 0, "buckets": {}, "data": {}}
+
+    def _publish(self, old: dict, written: Sequence[int], *,
+                 data_change: bool = True, replace: bool = False,
+                 props: dict | None = None) -> int:
+        """The one commit path: the manifest after ``old`` with the
+        ``written`` buckets (staged by ``_stage``) pointing at the new
+        version, committed, then the sweep. ``replace`` drops every
+        bucket not written; ``data_change=False`` keeps the ``data``
+        map, so ``changes()`` skips the rewrite. ``props`` merge over
+        the old ones, which always carry forward. Returns the version."""
+        version = old["version"] + 1
+        moved = {b: version for b in written}
+        kept = {"buckets": {}, "data": {}} if replace else old
+        manifest = {
+            "version": version,
+            "buckets": {**kept["buckets"], **moved},
+            "data": {**kept["data"], **(moved if data_change else {})},
+        }
+        carried = {**old.get("props", {}), **(props or {})}
+        if carried:
+            manifest["props"] = carried
+        self._commit_manifest(manifest)
+        self._gc()
+        return version
 
     def _commit_manifest(self, manifest: dict) -> None:
         """Publish atomically: the retained per-commit manifest first,
@@ -170,53 +214,41 @@ class ParquetMergeStore:
     def exists(self) -> bool:
         return os.path.exists(self._manifest_path)
 
+    def _scan(self, manifest: dict,
+              buckets: "set[int] | None" = None) -> DataFrame | None:
+        """The one manifest -> DataFrame path: the manifest's buckets
+        (or only those in ``buckets``), one read per referenced version
+        dir, unioned. Each read has ``basePath`` at its version dir so
+        the ``bucket=N`` partition column survives and bucket pruning
+        still works; a caller passing ``buckets`` opens only those
+        dirs, so its plan grows with the buckets it touches, not with
+        the version history. None when no selected bucket exists."""
+        by_version: dict[int, list[int]] = {}
+        for b, v in manifest["buckets"].items():
+            if buckets is None or b in buckets:
+                by_version.setdefault(v, []).append(b)
+        out = None
+        for v, bs in sorted(by_version.items()):
+            fr = self.spark.read.option("basePath", self._vdir(v)).parquet(
+                *[os.path.join(self._vdir(v), f"bucket={b}") for b in sorted(bs)])
+            out = fr if out is None else out.unionByName(fr)
+        return out
+
     def read(self, version: int | None = None) -> DataFrame:
         """Resolve bucket dirs through a manifest — the current one,
-        or commit ``version`` for TIME TRAVEL over retained history.
-        One read per referenced version dir (each with ``basePath`` at
-        its version dir so the ``bucket=N`` partition column survives
-        and bucket pruning still works), unioned."""
+        or commit ``version`` for TIME TRAVEL over retained history."""
         if version is not None and version not in self._retained_versions():
             raise ValueError(
                 f"version {version} is not available (never committed "
                 "or vacuumed away)")
         m = self._load_manifest(version)
-        if not m["buckets"]:
+        out = self._scan(m)
+        if out is None:
             # empty commits are rejected at write time, so this is a
-            # hand-edited/corrupt manifest — loud beats IndexError
+            # hand-edited/corrupt manifest
             raise ValueError(
                 f"manifest for version {m['version']} references no "
                 "buckets")
-        by_version: dict[int, list[int]] = {}
-        for b, v in m["buckets"].items():
-            by_version.setdefault(v, []).append(b)
-        frames = [
-            self.spark.read.option("basePath", self._vdir(v)).parquet(
-                *[os.path.join(self._vdir(v), f"bucket={b}") for b in sorted(bs)]
-            )
-            for v, bs in sorted(by_version.items())
-        ]
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
-        return out
-
-    def _read_buckets(self, manifest: dict, buckets: "set[int]") -> DataFrame | None:
-        by_version: dict[int, list[int]] = {}
-        for b, v in manifest["buckets"].items():
-            if b in buckets:
-                by_version.setdefault(v, []).append(b)
-        frames = [
-            self.spark.read.option("basePath", self._vdir(v)).parquet(
-                *[os.path.join(self._vdir(v), f"bucket={b}") for b in sorted(bs)]
-            )
-            for v, bs in sorted(by_version.items())
-        ]
-        if not frames:
-            return None
-        out = frames[0]
-        for fr in frames[1:]:
-            out = out.unionByName(fr)
         return out
 
     def read_buckets(self, buckets: Sequence[int],
@@ -227,8 +259,8 @@ class ParquetMergeStore:
         dedup: a daily batch reads just the store buckets its own band
         keys hash into, not the corpus-wide signature store. Returns
         None when no listed bucket exists in the manifest."""
-        return self._read_buckets(self._load_manifest(version),
-                                  set(int(b) for b in buckets))
+        return self._scan(self._load_manifest(version),
+                          {int(b) for b in buckets})
 
     def bucket_of(self, df: DataFrame) -> DataFrame:
         """Expose the store's bucketing function (hash(series) mod N)
@@ -261,8 +293,8 @@ class ParquetMergeStore:
             b for b in set(m_from["data"]) | set(m_to["data"])
             if m_from["data"].get(b) != m_to["data"].get(b)
         }
-        old = self._read_buckets(m_from, changed)
-        new = self._read_buckets(m_to, changed)
+        old = self._scan(m_from, changed)
+        new = self._scan(m_to, changed)
         ver = F.lit(to_version).alias("_commit_version")
 
         def project(df: DataFrame, change_type: str,
@@ -329,22 +361,22 @@ class ParquetMergeStore:
         )
         return inserts.unionByName(deletes).unionByName(pre).unionByName(post)
 
-    def _write_version(self, df: DataFrame, version: int) -> None:
-        # overwrite clobbers partial output from a crashed attempt at
-        # the same (never-committed) version number.
-        # r12 (guide §6 small files): cluster rows by bucket BEFORE
-        # the partitionBy write — an un-clustered write emits one file
-        # per (write task x bucket), so a 32-partition update frame
-        # fragments every touched bucket into ~32 tiny files and the
-        # NEXT probe/merge scans them all (measured: a 64-bucket LSH
-        # store read planned 64 splits over ~2k files, ~0.9s of the
-        # incremental probe's timed cost; one file per bucket reads in
-        # 2-3 splits). Same file-layout contract optimize() documents
-        # ("a bucket is the clustering unit"); the extra narrow
-        # shuffle of the update batch is the standard hash
-        # write-distribution trade (Iceberg write.distribution-mode).
+    def _stage(self, df: DataFrame, old: dict) -> list[int]:
+        """Write ``df`` (with its ``bucket`` column) under the version
+        dir the next commit after ``old`` will own; returns the buckets
+        written. Nothing is visible until ``_publish``."""
+        version = old["version"] + 1
+        os.makedirs(self.path, exist_ok=True)
+        # mode "overwrite" clobbers partial output from a crashed
+        # attempt at the same (never-committed) version number.
+        # Clustering by bucket before the partitionBy write gives one
+        # file per bucket: un-clustered, every write task emits a file
+        # into every touched bucket, and the next probe/merge scans
+        # them all (a 64-bucket LSH store read planned 64 splits over
+        # ~2k files; one file per bucket reads in 2-3 splits).
         df.repartition("bucket").write.mode("overwrite").partitionBy(
             "bucket").parquet(self._vdir(version))
+        return self._written_buckets(version)
 
     def overwrite(self, df: DataFrame, props: dict | None = None) -> None:
         """Replace the store contents. An EMPTY frame is rejected: a
@@ -356,25 +388,13 @@ class ParquetMergeStore:
         rows, not the parameters the state was built under); pass
         ``props`` to restamp when the rebuild changed them.
         """
-        old = self._load_manifest() if self.exists() else {}
-        version = old.get("version", 0) + 1
-        os.makedirs(self.path, exist_ok=True)
-        self._write_version(self._bucket(df), version)
-        buckets = self._written_buckets(version)
-        if not buckets:
+        old = self._current()
+        written = self._stage(self._bucket(df), old)
+        if not written:
             raise ValueError(
                 "refusing to commit an empty store (overwrite received "
                 "a frame with no rows)")
-        manifest = {
-            "version": version,
-            "buckets": {b: version for b in buckets},
-            "data": {b: version for b in buckets},
-        }
-        carried = {**old.get("props", {}), **(props or {})}
-        if carried:
-            manifest["props"] = carried
-        self._commit_manifest(manifest)
-        self._gc()
+        self._publish(old, written, replace=True, props=props)
 
     def optimize(self, buckets: Sequence[int] | None = None) -> dict:
         """OPTIMIZE analog: rewrite the current snapshot (or just the
@@ -395,35 +415,18 @@ class ParquetMergeStore:
         lakehouse analog: Delta OPTIMIZE (bin-packing compaction).
         Returns {'version', 'buckets_rewritten', 'dirs_before'}.
         """
-        old = self._load_manifest()
+        old = self._current()
         target = (set(old["buckets"]) if buckets is None
                   else {b for b in buckets if b in old["buckets"]})
         if not target:
             raise ValueError("no existing buckets to optimize")
         dirs_before = len(set(old["buckets"].values()))
-        current = self._read_buckets(old, target)
-        version = old["version"] + 1
-        # one file per bucket: the small-file rewrite. At 100 TB this
-        # maps to Delta OPTIMIZE's bin packing (a bucket is the
-        # clustering unit). _write_version now clusters by bucket
-        # itself, so no extra repartition here.
-        self._write_version(current, version)
-        written = set(self._written_buckets(version))
+        written = set(self._stage(self._scan(old, target), old))
         if written != target:
             raise RuntimeError(
                 f"optimize rewrote buckets {sorted(written)} but expected "
                 f"{sorted(target)}")
-        new_buckets = dict(old["buckets"])
-        new_buckets.update({b: version for b in written})
-        manifest = {"version": version, "buckets": new_buckets,
-                    "data": dict(old["data"])}  # dataChange=false
-        if old.get("props"):
-            # compaction must not strip the parameter stamp — a
-            # props-less manifest makes the next check_props-gated
-            # increment hard-fail on a perfectly valid store
-            manifest["props"] = dict(old["props"])
-        self._commit_manifest(manifest)
-        self._gc()
+        version = self._publish(old, written, data_change=False)
         return {"version": version, "buckets_rewritten": len(written),
                 "dirs_before": dirs_before}
 
@@ -436,11 +439,7 @@ class ParquetMergeStore:
         the optimize stats, or None if below the threshold — callers
         drop this after ingest batches the way the reference schedules
         maintain.R housekeeping after updates."""
-        try:
-            m = self._load_manifest()
-        except FileNotFoundError:
-            return None
-        if len(set(m["buckets"].values())) <= max_fragments:
+        if len(set(self._current()["buckets"].values())) <= max_fragments:
             return None
         return self.optimize(buckets)
 
@@ -477,21 +476,19 @@ class ParquetMergeStore:
     def stamp_props(self, props: dict) -> None:
         """Commit a manifest that records ``props`` without touching
         data — the explicit migration path for pre-stamp stores."""
-        old = self._load_manifest()
-        manifest = dict(old)
-        manifest["version"] = old["version"] + 1
-        manifest["props"] = {**old.get("props", {}), **props}
-        # retained per-commit manifest requires a version dir to exist
-        # only for buckets it references; data pointers are unchanged
-        self._commit_manifest(manifest)
+        self._publish(self._load_manifest(), (), data_change=False,
+                      props=props)
 
     def merge(self, updates: DataFrame, on_conflict: str = "update",
               props: dict | None = None) -> dict:
         """Upsert ``updates`` by key. Returns counts per action.
 
-        Only buckets containing updated series are rewritten (partition
+        Only buckets whose rows change are rewritten (partition
         pruning on the write side — the Delta MERGE behavior), and the
-        rewrite becomes visible atomically at the manifest replace.
+        rewrite becomes visible atomically at the manifest replace. A
+        merge that changes no row commits nothing. A key repeated
+        within ``updates`` raises ``ValueError`` before anything is
+        written.
 
         ``props``: application parameters this state depends on; the
         first merge stamps them into the manifest, every later merge
@@ -500,73 +497,65 @@ class ParquetMergeStore:
         """
         if on_conflict not in ("update", "do_nothing"):
             raise ValueError("on_conflict must be 'update' or 'do_nothing'")
-        if props and self.exists():
+        if props:
             self.check_props(props)
-        # one materialization of the update plan serves the touched-
-        # bucket probe, both counts, and the merge write (the unpersisted
-        # version re-executed a possibly-expensive connector plan 3x —
-        # VERDICT r1 finding)
+        old = self._current()
+        # one materialization of the update plan serves the batch
+        # stats, the joins and the write: unpersisted, a possibly
+        # expensive connector plan would re-run once per action
         updates = self._bucket(updates).persist()
-        if not self.exists():
-            os.makedirs(self.path, exist_ok=True)
-            self._write_version(updates, 1)
-            initial = self._written_buckets(1)
-            if not initial:
-                updates.unpersist()
+        try:
+            # ONE aggregation yields the touched buckets, the row total
+            # and the repeated-key check
+            rows: dict[int, int] = {}
+            for r in (updates.groupBy("bucket", *self.key_cols)
+                      .agg(F.count(F.lit(1)).alias("__n"))
+                      .groupBy("bucket")
+                      .agg(F.sum("__n").alias("__rows"),
+                           F.first(F.when(F.col("__n") > 1,
+                                          F.struct(*self.key_cols)),
+                                   ignorenulls=True).alias("__dup"))
+                      .collect()):
+                if r["__dup"] is not None:
+                    raise ValueError(
+                        f"merge batch repeats key {r['__dup'].asDict()}: "
+                        "a key may appear at most once per merge")
+                rows[r["bucket"]] = r["__rows"]
+            total = sum(rows.values())
+            if not total and not old["buckets"]:
                 raise ValueError(
                     "refusing to create an empty store (initial merge "
                     "received a frame with no rows)")
-            manifest = {
-                "version": 1,
-                "buckets": {b: 1 for b in initial},
-                "data": {b: 1 for b in initial},
-            }
-            if props:
-                manifest["props"] = dict(props)
-            self._commit_manifest(manifest)
-            n = updates.count()
+            # bucket-pruned read through the manifest (NOT
+            # read().where): the merge plan stays O(touched buckets),
+            # not O(versions), which a daily-increment cadence needs
+            existing = self._scan(old, set(rows))
+            if existing is None:
+                # no touched bucket exists yet: pure insert, no joins
+                merged, changed = updates, set(rows)
+                counts = {"inserted": total, "updated": 0, "kept": 0}
+            elif on_conflict == "update":
+                n_updated = existing.join(
+                    updates, self.key_cols, "left_semi").count()
+                merged = existing.join(
+                    updates, self.key_cols, "left_anti").unionByName(updates)
+                changed = set(rows)
+                counts = {"inserted": total - n_updated,
+                          "updated": n_updated, "kept": 0}
+            else:
+                fresh = updates.join(existing, self.key_cols, "left_anti")
+                # per-bucket fresh counts: a bucket gaining no row is
+                # neither rewritten nor moved in the ``data`` map
+                gained = {r["bucket"]: r["__n"] for r in fresh.groupBy(
+                    "bucket").agg(F.count(F.lit(1)).alias("__n")).collect()}
+                changed = set(gained)
+                merged = existing.where(F.col("bucket").isin(
+                    sorted(changed))).unionByName(fresh)
+                n_fresh = sum(gained.values())
+                counts = {"inserted": n_fresh, "updated": 0,
+                          "kept": total - n_fresh}
+            if changed:
+                self._publish(old, self._stage(merged, old), props=props)
+            return counts
+        finally:
             updates.unpersist()
-            return {"inserted": n, "updated": 0, "kept": 0}
-
-        old = self._load_manifest()
-        touched = [
-            r["bucket"] for r in updates.select("bucket").distinct().collect()
-        ]
-        # bucket-pruned read through the manifest (NOT read().where):
-        # read() plans one scan node per retained version dir, so on a
-        # fragmented store every small merge re-plans a union over the
-        # whole version history; _read_buckets references only the
-        # touched buckets' dirs — the merge plan stays O(touched), not
-        # O(versions), which is what a daily-increment cadence needs
-        existing = self._read_buckets(old, set(touched))
-        if existing is None:
-            # none of the touched buckets exist yet: pure insert
-            existing = updates.limit(0)
-
-        total = updates.count()
-        if on_conflict == "update":
-            survivors = existing.join(updates, self.key_cols, "left_anti")
-            merged = survivors.unionByName(updates)
-            n_updated = existing.join(updates, self.key_cols, "left_semi").count()
-            counts = {"inserted": total - n_updated, "updated": n_updated, "kept": 0}
-        else:
-            fresh = updates.join(existing, self.key_cols, "left_anti")
-            merged = existing.unionByName(fresh)
-            n_fresh = fresh.count()
-            counts = {"inserted": n_fresh, "updated": 0, "kept": total - n_fresh}
-
-        version = old["version"] + 1
-        self._write_version(merged, version)
-        written = self._written_buckets(version)
-        buckets = dict(old["buckets"])
-        buckets.update({b: version for b in written})
-        data = dict(old["data"])
-        data.update({b: version for b in written})
-        manifest = {"version": version, "buckets": buckets, "data": data}
-        carried = {**old.get("props", {}), **(props or {})}
-        if carried:
-            manifest["props"] = carried
-        self._commit_manifest(manifest)
-        self._gc()
-        updates.unpersist()
-        return counts

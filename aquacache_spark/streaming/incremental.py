@@ -11,11 +11,12 @@ patch_48.R:215-218,401-408):
 
 Spark-first realization: the change feed is any DataFrame of changed
 ranges (in production: Delta Change Data Feed micro-batches via
-``foreachBatch``); the dependency closure is a driver-side iterative
-join to fixpoint (compound graphs are catalog-sized — thousands of
-rows, not data-sized); the recompute is an ordinary partition-pruned
-batch over only the touched slices; the merge plan classifies
-insert/update/unchanged so a Delta MERGE writes only real changes.
+``foreachBatch``); the dependency closure is one driver-side walk over
+the collected member graph (compound graphs are catalog-sized —
+thousands of rows, not data-sized); the recompute is an ordinary
+partition-pruned batch over only the touched slices; the merge plan
+classifies insert/update/unchanged so a Delta MERGE writes only real
+changes.
 At 100 TB correctness of this design rests on partition pruning by
 ``(timeseries_id, date)`` — recompute cost is proportional to changed
 data, never table size.
@@ -29,61 +30,57 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# Walk bound on the compound graph: guards accidental cycles (the
+# reference also carries an explicit visited path, patch_53.R:876-878).
+MAX_DEPTH = 32
+
+
+def _member_graph(compound_members: DataFrame, member_col: str,
+                  compound_col: str) -> dict:
+    """member -> [compounds using it], collected to the driver: the
+    compound graph is catalog-sized (thousands of definitions, never
+    fact-scale), so one Spark job fetches it."""
+    adj: dict = {}
+    edges = compound_members.select(member_col, compound_col).distinct()
+    for src, dst in edges.collect():
+        adj.setdefault(src, []).append(dst)
+    return adj
+
+
+def _downstream(adj: dict, seeds, max_depth: int = MAX_DEPTH) -> set:
+    """Breadth-first walk: every node reachable from ``seeds`` in 1 to
+    ``max_depth`` steps (a seed appears only when a cycle leads back
+    to it)."""
+    seen: set = set()
+    frontier = set(seeds)
+    for _ in range(max_depth):
+        frontier = {d for s in frontier for d in adj.get(s, ())
+                    if d not in seen}
+        if not frontier:
+            break
+        seen |= frontier
+    return seen
+
+
 def downstream_closure(
     compound_members: DataFrame,
     seed_ids: DataFrame,
     member_col: str = "member_timeseries_id",
     compound_col: str = "timeseries_id",
-    max_depth: int = 32,
+    max_depth: int = MAX_DEPTH,
 ) -> DataFrame:
-    """Transitive closure: all compounds depending (directly or through
-    nested compounds) on the seed series.
+    """Transitive closure: the seed series plus all compounds depending
+    (directly or through nested compounds) on them.
 
     Port of WITH RECURSIVE downstream_timeseries_ids
-    (patch_41.R:2516-2538). The compound graph is *catalog*-sized
-    (thousands of definitions, never fact-scale), so the closure runs
-    as a driver-side BFS over the collected edge list — one Spark job
-    to fetch edges, zero per-iteration jobs. A distributed join-loop
-    fallback kicks in only if the edge list is unexpectedly huge.
-    ``max_depth`` guards accidental cycles (the reference also carries
-    an explicit visited path, patch_53.R:876-878).
+    (patch_41.R:2516-2538), as a driver-side walk over the collected
+    edge list — one Spark job to fetch edges, zero per-iteration jobs.
     """
-    edges = compound_members.select(
-        F.col(member_col).alias("src"), F.col(compound_col).alias("dst")
-    ).distinct()
-    n_edges = edges.limit(1_000_001).count()
-    if n_edges <= 1_000_000:
-        adj: dict = {}
-        for r in edges.collect():
-            adj.setdefault(r["src"], []).append(r["dst"])
-        seen = {r[0] for r in seed_ids.select(seed_ids.columns[0]).collect()}
-        frontier = set(seen)
-        for _ in range(max_depth):
-            nxt = {
-                d for s in frontier for d in adj.get(s, ()) if d not in seen
-            }
-            if not nxt:
-                break
-            seen |= nxt
-            frontier = nxt
-        spark = compound_members.sparkSession
-        return spark.createDataFrame([(i,) for i in sorted(seen)], ["id"])
-
-    edges = edges.cache()
-    acc = seed_ids.select(F.col(seed_ids.columns[0]).alias("id")).distinct()
-    frontier = acc
-    for _ in range(max_depth):
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(acc, "id", "left_anti")
-        )
-        if nxt.isEmpty():
-            break
-        acc = acc.unionByName(nxt)
-        frontier = nxt
-    return acc
+    adj = _member_graph(compound_members, member_col, compound_col)
+    seeds = {r[0] for r in seed_ids.select(seed_ids.columns[0]).collect()}
+    ids = seeds | _downstream(adj, seeds, max_depth)
+    spark = compound_members.sparkSession
+    return spark.createDataFrame([(i,) for i in sorted(ids)], ["id"])
 
 
 def expand_changed_ranges(
@@ -100,25 +97,9 @@ def expand_changed_ranges(
     from the catalog-sized member graph, then applied to the changed
     ranges with ONE broadcast join — no per-level Spark jobs.
     """
-    edges = compound_members.select(
-        F.col("member_timeseries_id").alias("src"),
-        F.col("timeseries_id").alias("dst"),
-    ).distinct()
-    adj: dict = {}
-    for r in edges.collect():
-        adj.setdefault(r["src"], []).append(r["dst"])
-
-    def reach(start):
-        seen, frontier = set(), {start}
-        for _ in range(32):
-            nxt = {d for s in frontier for d in adj.get(s, ()) if d not in seen}
-            if not nxt:
-                break
-            seen |= nxt
-            frontier = nxt
-        return seen
-
-    pairs = [(s, d) for s in adj for d in reach(s)]
+    adj = _member_graph(compound_members, "member_timeseries_id",
+                        "timeseries_id")
+    pairs = [(s, d) for s in adj for d in _downstream(adj, {s})]
     spark = changes.sparkSession
     out = changes
     if pairs:

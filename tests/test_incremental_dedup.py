@@ -85,6 +85,7 @@ def test_refed_docs_are_idempotent(spark, tmp_path):
     store = _store(spark, tmp_path)
     p1 = _pairs_set(incremental_lsh_pairs(store, sig))
     n_rows = store.read().count()
+    history = store._retained_versions()
     # feeding the same corpus again: no self-pairs, no new store rows,
     # and the pair set is exactly re-emitted (every pair has a "new"
     # endpoint again)
@@ -92,6 +93,9 @@ def test_refed_docs_are_idempotent(spark, tmp_path):
     assert p2 == p1
     assert all(a != b for a, b in p2)
     assert store.read().count() == n_rows
+    # the re-fed merge changes no row, so it commits no new version
+    assert store._retained_versions() == history
+    assert store._load_manifest()["version"] == history[-1]
 
 
 def test_cap_crossing_preserves_connectivity(spark, tmp_path):

@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from aquacache_spark.sources.store import ParquetMergeStore
@@ -50,6 +51,21 @@ def test_merge_update_and_do_nothing(spark, tmp_path):
     assert got[(1, "2024-01-01 02:00:00")] == 3.0  # kept
     assert got[(3, "2024-01-01 00:00:00")] == 7.0  # inserted
 
+    # a key repeated within one batch is refused in both modes: nothing
+    # is committed and the batch cache is released
+    dup = make_df(spark, [
+        (4, "2024-01-01 00:00:00", 1.0),
+        (4, "2024-01-01 00:00:00", 2.0),
+    ])
+    version = store._load_manifest()["version"]
+    cached = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    for mode in ("update", "do_nothing"):
+        with pytest.raises(ValueError, match="repeats key.*timeseries_id"):
+            store.merge(dup, on_conflict=mode)
+        assert store._load_manifest()["version"] == version
+        assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == cached
+    assert store.read().where(F.col("timeseries_id") == 4).count() == 0
+
 
 def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     path = str(tmp_path / "store2")
@@ -67,12 +83,30 @@ def test_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert len(changed) == 1
     assert set(after) == set(before)
 
+    # do_nothing: a bucket whose batch rows all exist already is not
+    # rewritten — only the bucket gaining a row moves
+    bucket = {r["timeseries_id"]: r["bucket"]
+              for r in store.bucket_of(base).collect()}
+    new_id = next(i for i in range(40) if bucket[i] != bucket[1])
+    stats = store.merge(make_df(spark, [
+        (1, "2024-01-01 00:00:00", 5.0),
+        (new_id, "2024-01-02 00:00:00", 5.0),
+    ]), on_conflict="do_nothing")
+    assert stats == {"inserted": 1, "updated": 0, "kept": 1}
+    final = store._load_manifest()
+    assert [b for b in after if final["buckets"][b] != after[b]] == [
+        bucket[new_id]]
+    assert [b for b in after if final["data"][b] != after[b]] == [
+        bucket[new_id]]
 
+
+@pytest.mark.parametrize("commit", ["merge", "overwrite", "optimize"])
 def test_crash_between_stage_and_commit_reads_old_store(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, commit
 ):
-    """Kill-mid-merge: a failure anywhere before the manifest replace
-    must leave the store exactly at its previous committed state."""
+    """Kill-mid-commit: a failure anywhere before the manifest replace
+    must leave the store exactly at its previous committed state, for
+    every commit kind (they share one publish path)."""
     path = str(tmp_path / "store3")
     store = ParquetMergeStore(spark, path, ["timeseries_id", "datetime"],
                               n_buckets=4)
@@ -81,6 +115,14 @@ def test_crash_between_stage_and_commit_reads_old_store(
     pre = sorted(
         (r["timeseries_id"], r["value"]) for r in store.read().collect()
     )
+    rows = [(i, "2024-01-01 00:00:00", 999.0 if i == 1 else float(i))
+            for i in range(8)]
+    run = {
+        "merge": lambda: store.merge(make_df(spark, rows[1:2])),
+        "overwrite": lambda: store.overwrite(make_df(spark, rows)),
+        "optimize": lambda: store.optimize(),
+    }[commit]
+    want = pre if commit == "optimize" else sorted((i, v) for i, _, v in rows)
 
     import os
 
@@ -90,10 +132,8 @@ def test_crash_between_stage_and_commit_reads_old_store(
         raise OSError("crash before commit")
 
     monkeypatch.setattr("aquacache_spark.sources.store.os.replace", boom)
-    try:
-        store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 999.0)]))
-    except OSError:
-        pass
+    with pytest.raises(OSError, match="crash before commit"):
+        run()
     monkeypatch.setattr("aquacache_spark.sources.store.os.replace",
                         real_replace)
 
@@ -102,12 +142,19 @@ def test_crash_between_stage_and_commit_reads_old_store(
         (r["timeseries_id"], r["value"]) for r in store.read().collect()
     )
     assert post == pre
+    assert store._retained_versions() == [1]
 
     # retry commits cleanly and sweeps the orphan version dir
-    store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 999.0)]))
-    got = {r["timeseries_id"]: r["value"] for r in store.read().collect()}
-    assert got[1] == 999.0 and got[2] == 2.0
-    live = set(store._load_manifest()["buckets"].values())
+    run()
+    got = sorted(
+        (r["timeseries_id"], r["value"]) for r in store.read().collect()
+    )
+    assert got == want
+    assert store._load_manifest()["version"] == 2
+    # on disk: exactly the dirs some retained commit references (the
+    # overwritten/compacted v1 stays readable by time travel)
+    live = {v for k in store._retained_versions()
+            for v in store._load_manifest(k)["buckets"].values()}
     on_disk = {int(d[1:]) for d in os.listdir(path)
                if d.startswith("v") and d[1:].isdigit()}
     assert on_disk == live
@@ -215,9 +262,18 @@ def test_empty_commits_rejected(spark, tmp_path):
     assert not store.exists()  # nothing half-committed
     # a real store then works, and an empty MERGE into it is a no-op
     store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 1.0)]))
+    history = store._retained_versions()
     stats = store.merge(empty)
     assert stats == {"inserted": 0, "updated": 0, "kept": 0}
     assert store.read().count() == 1
+    # a merge that changes no row commits nothing: no version moves
+    assert store._retained_versions() == history
+    assert store._load_manifest()["version"] == history[-1]
+    stats = store.merge(make_df(spark, [(1, "2024-01-01 00:00:00", 5.0)]),
+                        on_conflict="do_nothing")
+    assert stats == {"inserted": 0, "updated": 0, "kept": 1}
+    assert store._retained_versions() == history
+    assert store.read().first()["value"] == 1.0
 
 
 def test_optimize_compacts_preserving_history_and_cdf(spark, tmp_path):
